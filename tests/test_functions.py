@@ -7,6 +7,7 @@ li#footer-info-lastmod (categorizer.py:110-116), script/style stripping
 from __future__ import annotations
 
 import datetime as dt
+import math
 
 from pyspark.sql import functions as F
 
@@ -22,6 +23,7 @@ from wikipediaetl_spark.functions.urls import (
     sanitize_filename,
     url_to_filename,
 )
+from wikipediaetl_spark.operators.relational import cents
 
 FULL_PAGE = (
     '<html><head><title>T</title><script>var a=1;</script></head><body>'
@@ -129,9 +131,19 @@ def test_sanitize_filename(spark):
         ("/a/b/Already_safe.html", "Already_safe"),
         ("no_slash.html", "no_slash"),
         ("/x/keep.txt", "keep.txt"),  # only .html is stripped
+        ("/d/a.html.b.html", "a.html.b"),  # only a trailing .html is stripped
     ]
     df = spark.createDataFrame([(p,) for p, _ in cases], "p string")
     got = [r.s for r in df.select(sanitize_filename(F.col("p")).alias("s")).collect()]
+    assert got == [want for _, want in cases]
+
+
+def test_cents_rounds_ties_toward_positive_infinity(spark):
+    # exactly representable ties: half toward +inf, not HALF_UP (-0.125 -> -12)
+    cases = [(-0.125, -12), (0.125, 13), (-1.125, -112)]
+    assert [math.floor(x * 100 + 0.5) for x, _ in cases] == [want for _, want in cases]
+    df = spark.createDataFrame([(x,) for x, _ in cases], "x double")
+    got = [r.c for r in df.select(cents(F.col("x")).alias("c")).collect()]
     assert got == [want for _, want in cases]
 
 

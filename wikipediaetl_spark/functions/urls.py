@@ -44,11 +44,17 @@ def sanitize_filename(path: Column) -> Column:
     """File-safe name from a path: basename after the last '/', all chars
     outside [a-zA-Z0-9._-] replaced by '_', trailing '.html' stripped.
 
-    Parity: ETL/tasks/utils.py:4-11 (used at categorizer.py:126,133 and
+    Port of ETL/tasks/utils.py:4-11 (used at categorizer.py:126,133 and
     converter.py:50,55) — the reference's Python UDF rewritten as native
-    expressions. r12 (guide §4 — per-row regex is the floor, so run less
-    of it): 2 of the 3 regexes replaced by cheap substring builtins,
-    exactly equivalent on ANY input:
+    expressions, with one deliberate divergence: the reference's
+    ``.replace('.html', '')`` removes EVERY '.html' ('a.html.b.html' →
+    'a.b'), while this strips only a trailing one ('a.html.b'). Only the
+    trailing '.html' is the file extension; an inner one is part of the
+    name, and removing it could map distinct pages to one filename.
+
+    r12 (guide §4 — per-row regex is the floor, so run less of it): 2 of
+    the 3 regexes replaced by cheap substring builtins, exactly equivalent
+    on ANY input:
     - ``regexp_extract(path, '([^/]*)$', 1)`` ≡ ``substring_index(path,
       '/', -1)`` — the first match of an end-anchored no-slash run is
       everything after the last '/' (the whole string when there is no

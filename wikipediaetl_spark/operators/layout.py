@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wikipediaetl_spark.catalog import query
+from wikipediaetl_spark.operators.relational import cents
 from wikipediaetl_spark.sources import load_table
 
 
@@ -1496,9 +1497,7 @@ def q166_storage_merge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("o_orderstatus")
             .agg(
                 F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-                ).alias("total_cents"),
+                F.sum(cents(F.col("o_totalprice"))).alias("total_cents"),
             )
             .localCheckpoint(eager=True)
         )
@@ -1567,7 +1566,7 @@ def q176_star_mv_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_custkey",
         F.year("o_orderdate").alias("o_year"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long").alias("o_cents"),
+        cents(F.col("o_totalprice")).alias("o_cents"),
     )
     c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey", "n_name")

@@ -54,6 +54,24 @@ def davg(col, scale: int = 4):
     return dsum(col, scale) / F.count(F.lit(1))
 
 
+def cents(col):
+    """Exact integer cents of a 2-decimal money double:
+    ``floor(x*100 + 0.5)`` as BIGINT — the one Column-side money quantizer.
+
+    Ties round half toward +∞, which is not HALF_UP for negatives:
+    0.125 → 13 but -0.125 → -12 (HALF_UP would give -13). The floor of the
+    same IEEE double is bit-deterministic on every engine, so sums of cents
+    are exact and order-independent. SQL twin (the oracles):
+    CAST(floor(x * 100 + 0.5) AS BIGINT).
+
+    Prefer cents over micro-units for table-wide sums: micro-unit totals
+    overflow BIGINT around 2e12 cents-rows (q157 hit ANSI
+    ARITHMETIC_OVERFLOW at the 400×/240M-row fixture); cents give 1e4 more
+    headroom (~1.8e12 rows at 5e6 cents/row).
+    """
+    return F.floor(col * 100 + F.lit(0.5)).cast("long")
+
+
 # ---------------------------------------------------------------- scans
 
 
@@ -348,12 +366,11 @@ def q10_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of 15 — still nothing. Within-run A/B at 400×
     (tools/exp_decfold_wave.py): 3.07 → 1.45 s (2.12×), values identical."""
     o = _t(spark, sf_dir, "orders")
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
     base = (
         o.select(
             "o_orderstatus",
             "o_orderpriority",
-            cents.alias("c"),
+            cents(F.col("o_totalprice")).alias("c"),
             F.spark_partition_id().alias("p"),
         )
         .groupBy("o_orderstatus", "o_orderpriority", "p")
@@ -406,9 +423,7 @@ def q11_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = _t(spark, sf_dir, "region")
     per_cust = o.groupBy("o_custkey").agg(
         F.count(F.lit(1)).alias("pn"),
-        F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")).alias(
-            "pcents"
-        ),
+        F.sum(cents(F.col("o_totalprice"))).alias("pcents"),
     )
     return (
         per_cust.join(c, per_cust.o_custkey == c.c_custkey)
@@ -540,9 +555,7 @@ def q13_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
     oa = o.groupBy("o_custkey").agg(
         F.count(F.lit(1)).alias("pn"),
-        F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")).alias(
-            "pcents"
-        ),
+        F.sum(cents(F.col("o_totalprice"))).alias("pcents"),
     )
     return c.join(oa, c.c_custkey == oa.o_custkey, "left").select(
         "c_custkey",
@@ -671,13 +684,14 @@ def q18_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tools/exp_decfold_wave.py): 2.01 → 0.88 s (2.27×), values identical."""
     o = _t(spark, sf_dir, "orders")
     bands = spark.createDataFrame(PRICE_BANDS, "band string, lo double, hi double")
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
     partial = (
         o.join(
             F.broadcast(bands),
             (F.col("o_totalprice") >= F.col("lo")) & (F.col("o_totalprice") < F.col("hi")),
         )
-        .select("band", cents.alias("c"), F.spark_partition_id().alias("p"))
+        .select(
+            "band", cents(F.col("o_totalprice")).alias("c"), F.spark_partition_id().alias("p")
+        )
         .groupBy("band", "p")
         .agg(F.count(F.lit(1)).alias("pn"), F.sum("c").alias("pc"))
     )
@@ -1050,12 +1064,11 @@ def q32_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     raises, never wraps, as the backstop). Measured within-run at 400×:
     2.24 → 0.84 s (2.67×), values identical."""
     o = _t(spark, sf_dir, "orders")
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
     partial = (
         o.select(
             F.year("o_orderdate").alias("o_year"),
             F.month("o_orderdate").alias("o_month"),
-            cents.alias("c"),
+            cents(F.col("o_totalprice")).alias("c"),
             F.spark_partition_id().alias("p"),
         )
         .groupBy("o_year", "o_month", "p")
@@ -1382,11 +1395,10 @@ def q66_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     one exact /100 → double. Within-run A/B at 400×
     (tools/exp_decfold_wave.py): 2.39 → 0.95 s (2.51×), values identical."""
     o = _t(spark, sf_dir, "orders")
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
     o.select(
         "o_orderstatus",
         "o_orderpriority",
-        cents.alias("c"),
+        cents(F.col("o_totalprice")).alias("c"),
         F.spark_partition_id().alias("p"),
     ).groupBy("o_orderstatus", "o_orderpriority", "p").agg(
         F.count(F.lit(1)).alias("pn"), F.sum("c").alias("pc")

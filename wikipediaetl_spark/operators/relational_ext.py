@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from wikipediaetl_spark.catalog import query
 from wikipediaetl_spark.operators.dedup import q53_shingle_neardup
+from wikipediaetl_spark.operators.relational import cents
 from wikipediaetl_spark.sources import load_table
 
 
@@ -46,9 +47,7 @@ def q75_minmax_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     and identical on both engines. Envelope: cents < 9.2e8 and orderkey
     < 1e10 fit BIGINT with no collision."""
     o = _t(spark, sf_dir, "orders")
-    rank = F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long") * F.lit(
-        10_000_000_000
-    ) + F.col("o_orderkey")
+    rank = cents(F.col("o_totalprice")) * F.lit(10_000_000_000) + F.col("o_orderkey")
     return o.groupBy("o_custkey").agg(
         F.max_by("o_orderkey", rank).alias("best_order"),
         F.min_by("o_orderkey", rank).alias("worst_order"),
@@ -79,17 +78,12 @@ def q76_conditional_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     wraps. Within-run A/B at 400× (tools/exp_decfold_wave.py):
     1.45 → 0.88 s (1.64×), values identical."""
     o = _t(spark, sf_dir, "orders")
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    urgent = F.when(F.col("o_orderpriority") == "1-URGENT", cents(F.col("o_totalprice")))
     return o.groupBy("o_custkey").agg(
         F.count_if(F.col("o_orderstatus") == "O").alias("n_open"),
         F.count_if(F.col("o_orderstatus") == "F").alias("n_finished"),
         F.coalesce(
-            (
-                F.sum(F.when(F.col("o_orderpriority") == "1-URGENT", cents)).cast(
-                    "decimal(38,0)"
-                )
-                / 100
-            ).cast("double"),
+            (F.sum(urgent).cast("decimal(38,0)") / 100).cast("double"),
             F.lit(0.0),
         ).alias("urgent_spend"),
     )
@@ -235,7 +229,7 @@ def q81_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the broadcast join with one exact /100 → double. Within-run
             # A/B at 400× (tools/exp_decfold_wave.py): 3.31 → 1.92 s
             # (1.72×), values identical.
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")).alias("pv"),
+            F.sum(cents(F.col("value"))).alias("pv"),
         )
     )
     dim = c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey).select(
@@ -1313,9 +1307,11 @@ def q108_exact_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     an error, never a wrong answer. Measured within-run at 400×: 12.7 →
     2.07 s (6.2×), values bit-identical."""
     li = _t(spark, sf_dir, "lineitem")
-    cx = F.floor(F.col("l_quantity") * 100 + F.lit(0.5)).cast("long")
-    cy = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
-    c = li.select("l_returnflag", cx.alias("x"), cy.alias("y"))
+    c = li.select(
+        "l_returnflag",
+        cents(F.col("l_quantity")).alias("x"),
+        cents(F.col("l_extendedprice")).alias("y"),
+    )
     d = lambda col: F.col(col).cast("decimal(38,0)")
     yh = (F.col("y") / 8192).cast("long")
     yl = F.col("y") - yh * 8192

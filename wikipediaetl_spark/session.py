@@ -4,6 +4,10 @@ Scale posture: AQE on (runtime re-plan, skew-join splitting, partition
 coalescing), UTC session timezone (oracle comparability), Arrow enabled for
 pandas-UDF exchange. ``shuffle_partitions`` defaults to the local core count —
 on a real cluster this should be ~2-3x total executor cores; callers pass it.
+There is deliberately no env knob for the 128KB scan-split floor
+(``openCostInBytes``): ``extra_conf`` is applied after the defaults, so
+``get_spark(extra_conf={"spark.sql.files.openCostInBytes": "4194304"})``
+already restores Spark's 4MB.
 """
 
 from __future__ import annotations
