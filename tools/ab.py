@@ -79,6 +79,8 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         p.error("need two arms, or --conf with one or more queries")
     if args.conf and "=" not in args.conf:
         p.error("--conf takes key=v1,v2[,...]")
+    if args.reps < 1:
+        p.error("--reps must be at least 1")
     comps = comparisons(args)
     keys = [n for n, _ in comps] + [(n, label) for n, arms in comps for label, _, _ in arms]
     if len(set(keys)) < len(keys):
